@@ -17,6 +17,8 @@ dictionaries in their closures.
 from __future__ import annotations
 
 import argparse
+import os
+import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -115,6 +117,11 @@ def run_pipeline(
         _CACHE_LAZY = {"scored", "event_triples_src", "triples", "concept_rows",
                        "concept_text", "eventualities"}
 
+        def __init__(self):
+            # one output root per run: concurrent storeless runs never share
+            # scratch paths (the written triples land under it)
+            self.root = tempfile.mkdtemp(prefix="folkscope_mem_")
+
         def stage(self, _spark, name, _fp, build, **kw):
             df = build()
             if name in self._LAZY:
@@ -125,7 +132,7 @@ def run_pipeline(
             return df
 
         def data_path(self, name):
-            return "/tmp/folkscope_mem_" + name
+            return os.path.join(self.root, name)
 
         def manifest(self, name):
             return None
@@ -149,8 +156,6 @@ def run_pipeline(
     counters: dict[str, int] = {}
 
     def build_assertions():
-        import os
-
         pairs = generate.pairs_from_pages(pages)
         prompts = generate.build_prompts(pairs, items, templates)
         m = store.manifest("assertions")
@@ -168,15 +173,20 @@ def run_pipeline(
             return generate.explode_assertions(gens, templates, items)
         # keep only reusable rows still requested by this run, anti-join the
         # rest; the counters prove zero prompts were regenerated
-        reused = prev.join(
-            prompts.select("pair_key").distinct(), "pair_key", "left_semi"
-        )
+        keys = prompts.select("pair_key").distinct()
+        reused = prev.join(keys, "pair_key", "left_semi")
         done = reused.select("pair_key").distinct()
         todo = generate.resume_filter(prompts, done)
-        counters["assertions_reused_keys"] = done.count()
-        counters["assertions_generated_keys"] = (
-            todo.select("pair_key").distinct().count()
+        # both counters in one pass over the requested keys: a key is reused
+        # when the prior snapshot holds it, generated otherwise
+        hit = F.col("_done").isNotNull()
+        n = (
+            keys.join(done.withColumn("_done", F.lit(True)), "pair_key", "left")
+            .agg(F.count_if(hit).alias("reused"), F.count_if(~hit).alias("generated"))
+            .first()
         )
+        counters["assertions_reused_keys"] = int(n["reused"])
+        counters["assertions_generated_keys"] = int(n["generated"])
         fresh = generate.explode_assertions(
             generate.generate_assertions(
                 todo, micro_batches=micro_batches, dense_tails=dense_tails

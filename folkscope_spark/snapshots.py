@@ -6,7 +6,7 @@ commit / resume / lineage are provided by a thin manifest layer:
 * each stage commits to a fresh **versioned** directory
   ``<root>/data/<stage>/<snapshot_id>/`` via Spark parquet write, then
   atomically renames a JSON manifest into ``<root>/_snapshots/<stage>.json``
-  carrying the input fingerprint, row count and per-partition counters; prior
+  carrying the input fingerprint, row count and data-file count; prior
   versions are garbage-collected only after the new manifest is published.
   A re-commit therefore never overwrites a path a resume plan is still
   scanning (Spark's "cannot overwrite a path that is also being read from"
@@ -16,8 +16,12 @@ commit / resume / lineage are provided by a thin manifest layer:
   present -> the stage is skipped and its committed output is read back
   (the reference's skip-if-file-exists caching, ``generation.py:151-158,
   200-230``, with actual integrity checks);
-* every commit appends per-partition lineage rows to ``<root>/metrics/``
-  (north_rule: per-partition lineage + counters in a metrics table).
+* every commit adds ``<root>/metrics/<snapshot_id>.parquet``: one lineage
+  row per written data file (``partition_id`` = the file's index in sorted
+  path order, ``rows_out`` = its parquet footer's row count), so the
+  counters cost no Spark job and do not depend on how a re-read would split
+  the files (north_rule: per-partition lineage + counters in a metrics
+  table).
 
 The commit protocol (write data, then atomic-rename manifest) gives the same
 crash consistency contract as an Iceberg snapshot commit: a killed job leaves
@@ -30,7 +34,26 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .schemas import METRICS
+
+# the metrics files are written with pyarrow, typed like schemas.METRICS, so
+# Spark reads every commit's rows back as one table
+_METRICS_ARROW = to_arrow_schema(METRICS)
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet data files of a committed dir, in sorted path order
+    (Spark's ``_SUCCESS`` and hidden ``.crc`` files excluded)."""
+    return sorted(
+        os.path.join(path, name)
+        for name in os.listdir(path)
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    )
 
 
 class SnapshotStore:
@@ -71,17 +94,16 @@ class SnapshotStore:
     # ---------------------------------------------------------------- commit
 
     def commit(
-        self,
-        stage: str,
-        df: DataFrame,
-        fingerprint: str,
-        partition_by: list[str] | None = None,
-        detail: str = "",
+        self, stage: str, df: DataFrame, fingerprint: str, detail: str = ""
     ) -> DataFrame:
-        """Write the stage output, record per-partition counters, then
-        atomically publish the manifest.  Returns the committed data re-read
-        from parquet (so downstream stages scan columnar storage, not the
-        live lineage)."""
+        """Write the stage output, record per-file counters, then atomically
+        publish the manifest.  Returns the committed data re-read from parquet
+        (so downstream stages scan columnar storage, not the live lineage).
+
+        The data write is the commit's only Spark job: the counters come from
+        the written files' parquet footers, the metrics rows are written with
+        pyarrow, and the re-read reuses ``df``'s schema instead of inferring
+        it."""
         spark = df.sparkSession
         # sweep crash orphans first: a process that died between the parquet
         # write and the manifest publish left a version dir no manifest ever
@@ -95,43 +117,20 @@ class SnapshotStore:
         # versioned data dir: never write over the previous snapshot (whose
         # files may be inputs of this very plan, e.g. the J2 resume union)
         path = os.path.join(self.data_path(stage), snapshot_id)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
 
-        committed = spark.read.parquet(path)
-        # per-partition lineage counters (one cheap agg over the committed data)
-        part_counts = (
-            committed.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .collect()
-        )
-        rows = int(sum(r["count"] for r in part_counts))
-        metrics_rows = [
-            {
-                "stage": stage,
-                "snapshot_id": snapshot_id,
-                "partition_id": int(r["partition_id"]),
-                "rows_in": -1,
-                "rows_out": int(r["count"]),
-                "detail": detail,
-            }
-            for r in part_counts
-        ]
-        from .schemas import METRICS
-
-        spark.createDataFrame(metrics_rows, schema=METRICS).coalesce(1).write.mode(
-            "append"
-        ).parquet(os.path.join(self.root, "metrics"))
+        # per-file lineage counters from the footers (no data read; one
+        # footer per written file, so bounded by the write's task count)
+        file_rows = [pq.read_metadata(f).num_rows for f in _data_files(path)]
+        self._write_metrics(stage, snapshot_id, file_rows, detail)
 
         manifest = {
             "stage": stage,
             "snapshot_id": snapshot_id,
             "fingerprint": fingerprint,
             "path": path,
-            "rows": rows,
-            "n_partitions": len(part_counts),
+            "rows": sum(file_rows),
+            "n_partitions": len(file_rows),
             "committed_at": time.time(),
             "detail": detail,
         }
@@ -140,7 +139,30 @@ class SnapshotStore:
             json.dump(manifest, f)
         os.replace(tmp, self._manifest_path(stage))  # atomic publish
         self._gc_versions(stage, keep=snapshot_id)
-        return committed
+        return spark.read.schema(df.schema).parquet(path)
+
+    def _write_metrics(
+        self, stage: str, snapshot_id: str, file_rows: list[int], detail: str
+    ) -> None:
+        """One metrics file per snapshot, published by rename from a hidden
+        name (Spark's reader skips ``.``-prefixed files), so a reader never
+        sees a half-written file."""
+        n = len(file_rows)
+        table = pa.table(
+            {
+                "stage": [stage] * n,
+                "snapshot_id": [snapshot_id] * n,
+                "partition_id": list(range(n)),
+                "rows_in": [-1] * n,
+                "rows_out": file_rows,
+                "detail": [detail] * n,
+            },
+            schema=_METRICS_ARROW,
+        )
+        final = os.path.join(self.root, "metrics", f"{snapshot_id}.parquet")
+        tmp = os.path.join(self.root, "metrics", f".{snapshot_id}.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, final)
 
     def _gc_versions(self, stage: str, keep: str | None) -> None:
         """Drop version dirs other than ``keep`` (``None`` drops all).  Called
@@ -164,7 +186,6 @@ class SnapshotStore:
         stage: str,
         fingerprint: str,
         build,
-        partition_by: list[str] | None = None,
         detail: str = "",
     ) -> DataFrame:
         """Run-or-resume: if a committed snapshot matches the fingerprint,
@@ -172,7 +193,7 @@ class SnapshotStore:
         otherwise build, commit, return."""
         if self.is_committed(stage, fingerprint):
             return self.read(spark, stage)
-        return self.commit(stage, build(), fingerprint, partition_by, detail)
+        return self.commit(stage, build(), fingerprint, detail)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.root, "metrics"))
@@ -241,15 +262,10 @@ class IcebergSnapshotStore(SnapshotStore):
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.table(self._table(stage))
 
-    def commit(self, stage, df, fingerprint, partition_by=None, detail=""):
-        w = df.writeTo(self._table(stage)).tableProperty(
+    def commit(self, stage, df, fingerprint, detail=""):
+        df.writeTo(self._table(stage)).tableProperty(
             "folkscope.fingerprint", fingerprint
-        )
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()  # atomic Iceberg snapshot commit
+        ).createOrReplace()  # atomic Iceberg snapshot commit
         return self.read(df.sparkSession, stage)
 
 

@@ -189,6 +189,81 @@ def test_crash_orphan_versions_swept_on_next_commit(spark, tmp_path):
     ]
 
 
+def _group_job_ids(sc, group):
+    """Job ids of ``group`` once the status store has caught up: listener
+    events arrive in order, so a later marker job's visibility means every
+    job before it is recorded."""
+    import time
+
+    marker = group + "-marker"
+    sc.setJobGroup(marker, marker)
+    sc.parallelize([0], 1).count()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(marker) and time.time() < deadline:
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_commit_runs_only_the_data_write(spark, tmp_path):
+    """The data write is a commit's only Spark job: lineage comes from the
+    parquet footers, the metrics rows are written with pyarrow and the
+    re-read skips schema inference."""
+    from folkscope_spark.snapshots import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "jkg"))
+    sc = spark.sparkContext
+    sc.setJobGroup("one-job-commit", "one-job-commit")
+    try:
+        store.commit("s", spark.range(1000), "fp1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(_group_job_ids(sc, "one-job-commit")) == 1
+
+
+def test_commit_lineage_is_per_data_file(spark, tmp_path):
+    """Lineage rows count each written file's rows; their sum is the
+    manifest's row count and the committed row count, and the metrics
+    table keeps the METRICS schema across commits."""
+    import os
+
+    from folkscope_spark.schemas import METRICS
+    from folkscope_spark.snapshots import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "lkg"))
+    frames = {"narrow": spark.range(1000), "wide": spark.range(1000).repartition(5)}
+    for stage, df in frames.items():
+        committed = store.commit(stage, df, "fp1")
+        m = store.manifest(stage)
+        rows = store.metrics(spark).filter(F.col("snapshot_id") == m["snapshot_id"])
+        lineage = sorted((r["partition_id"], r["rows_out"]) for r in rows.collect())
+        assert [pid for pid, _ in lineage] == list(range(m["n_partitions"]))
+        assert sum(n for _, n in lineage) == m["rows"] == committed.count() == 1000
+    assert store.manifest("wide")["n_partitions"] == 5
+
+    metrics = store.metrics(spark)
+    assert [(f.name, f.dataType) for f in metrics.schema] == [
+        (f.name, f.dataType) for f in METRICS
+    ]
+    assert {r["stage"] for r in metrics.select("stage").distinct().collect()} == set(frames)
+    names = os.listdir(os.path.join(store.root, "metrics"))
+    assert not [n for n in names if n.startswith(".")], names
+
+
+def test_storeless_runs_write_to_their_own_roots(spark, result):
+    import os
+
+    from folkscope_spark.pipeline import run_pipeline
+
+    other = run_pipeline(spark, None, n_pages=30, n_items=10, with_concepts=False,
+                         with_canonicalize=False, max_extra=1)
+    paths = [r["store"].data_path("kg_triples") for r in (result, other)]
+    assert paths[0] != paths[1]
+    for p in paths:
+        assert os.path.exists(os.path.join(p, "_SUCCESS"))
+
+
 def test_connected_components_distributed_path(spark):
     from folkscope_spark.canonicalize import connected_components
 

@@ -11,6 +11,47 @@ from folkscope_spark.textnorm import URL_REGEX, clean_text, split_long_text, spl
 
 REF_UTILS = Path("/root/reference/src/pattern/utils.py")
 
+# The reference's URL_REGEX literal (src/pattern/utils.py, the published
+# Gruber "liberal, accurate" URL pattern), copied here so the clean-text
+# oracle runs without the reference checkout.  Split across lines only; the
+# value is byte-identical, which test_url_regex_byte_identical_to_reference
+# checks whenever the reference is present.
+REFERENCE_URL_PATTERN = (
+    r"(?i)\b((?:https?:(?:/{1,3}|[a-z0-9%])|[a-z0-9.\-]+[.](?:com|net"
+    r"|org|edu|gov|mil|aero|asia|biz|cat|coop|info|int|jobs|mobi|museum"
+    r"|name|post|pro|tel|travel|xxx|ac|ad|ae|af|ag|ai|al|am|an|ao|aq|ar"
+    r"|as|at|au|aw|ax|az|ba|bb|bd|be|bf|bg|bh|bi|bj|bm|bn|bo|br|bs|bt|bv"
+    r"|bw|by|bz|ca|cc|cd|cf|cg|ch|ci|ck|cl|cm|cn|co|cr|cs|cu|cv|cx|cy|cz"
+    r"|dd|de|dj|dk|dm|do|dz|ec|ee|eg|eh|er|es|et|eu|fi|fj|fk|fm|fo|fr|ga"
+    r"|gb|gd|ge|gf|gg|gh|gi|gl|gm|gn|gp|gq|gr|gs|gt|gu|gw|gy|hk|hm|hn|hr"
+    r"|ht|hu|id|ie|il|im|in|io|iq|ir|is|it|je|jm|jo|jp|ke|kg|kh|ki|km|kn"
+    r"|kp|kr|kw|ky|kz|la|lb|lc|li|lk|lr|ls|lt|lu|lv|ly|ma|mc|md|me|mg|mh"
+    r"|mk|ml|mm|mn|mo|mp|mq|mr|ms|mt|mu|mv|mw|mx|my|mz|na|nc|ne|nf|ng|ni"
+    r"|nl|no|np|nr|nu|nz|om|pa|pe|pf|pg|ph|pk|pl|pm|pn|pr|ps|pt|pw|py|qa"
+    r"|re|ro|rs|ru|rw|sa|sb|sc|sd|se|sg|sh|si|sj|Ja|sk|sl|sm|sn|so|sr|ss"
+    r"|st|su|sv|sx|sy|sz|tc|td|tf|tg|th|tj|tk|tl|tm|tn|to|tp|tr|tt|tv|tw"
+    r"|tz|ua|ug|uk|us|uy|uz|va|vc|ve|vg|vi|vn|vu|wf|ws|ye|yt|yu|za|zm"
+    r"|zw)/)(?:[^\s()<>{}\[\]]+|\([^\s()]*?\([^\s()]+\)[^\s()]*?\)"
+    r"|\([^\s]+?\))+(?:\([^\s()]*?\([^\s()]+\)[^\s()]*?\)|\([^\s]+?\)"
+    r"|[^\s`!()\[\]{};:\'"
+    r'".,<>?«»“”‘’])'
+    r"|(?:(?<!@)[a-z0-9]+(?:[.\-][a-z0-9]+)*[.](?:com|net|org|edu|gov"
+    r"|mil|aero|asia|biz|cat|coop|info|int|jobs|mobi|museum|name|post"
+    r"|pro|tel|travel|xxx|ac|ad|ae|af|ag|ai|al|am|an|ao|aq|ar|as|at|au"
+    r"|aw|ax|az|ba|bb|bd|be|bf|bg|bh|bi|bj|bm|bn|bo|br|bs|bt|bv|bw|by|bz"
+    r"|ca|cc|cd|cf|cg|ch|ci|ck|cl|cm|cn|co|cr|cs|cu|cv|cx|cy|cz|dd|de|dj"
+    r"|dk|dm|do|dz|ec|ee|eg|eh|er|es|et|eu|fi|fj|fk|fm|fo|fr|ga|gb|gd|ge"
+    r"|gf|gg|gh|gi|gl|gm|gn|gp|gq|gr|gs|gt|gu|gw|gy|hk|hm|hn|hr|ht|hu|id"
+    r"|ie|il|im|in|io|iq|ir|is|it|je|jm|jo|jp|ke|kg|kh|ki|km|kn|kp|kr|kw"
+    r"|ky|kz|la|lb|lc|li|lk|lr|ls|lt|lu|lv|ly|ma|mc|md|me|mg|mh|mk|ml|mm"
+    r"|mn|mo|mp|mq|mr|ms|mt|mu|mv|mw|mx|my|mz|na|nc|ne|nf|ng|ni|nl|no|np"
+    r"|nr|nu|nz|om|pa|pe|pf|pg|ph|pk|pl|pm|pn|pr|ps|pt|pw|py|qa|re|ro|rs"
+    r"|ru|rw|sa|sb|sc|sd|se|sg|sh|si|sj|Ja|sk|sl|sm|sn|so|sr|ss|st|su|sv"
+    r"|sx|sy|sz|tc|td|tf|tg|th|tj|tk|tl|tm|tn|to|tp|tr|tt|tv|tw|tz|ua|ug"
+    r"|uk|us|uy|uz|va|vc|ve|vg|vi|vn|vu|wf|ws|ye|yt|yu|za|zm"
+    r"|zw)\b/?(?!@)))"
+)
+
 
 def _reference_url_pattern() -> str:
     """Extract the URL regex string literal from the reference source (no import —
@@ -36,11 +77,16 @@ def _reference_url_pattern() -> str:
 @pytest.mark.skipif(not REF_UTILS.exists(), reason="reference not mounted")
 def test_url_regex_byte_identical_to_reference():
     assert URL_REGEX.pattern == _reference_url_pattern()
+    assert REFERENCE_URL_PATTERN == _reference_url_pattern()
+
+
+def test_url_regex_byte_identical_to_copied_reference_literal():
+    assert URL_REGEX.pattern == REFERENCE_URL_PATTERN
 
 
 def _reference_clean(text: str) -> str:
     """The reference cleaner re-executed literally (utils.py:195-214) as oracle."""
-    ref_url = re.compile(_reference_url_pattern(), re.IGNORECASE)
+    ref_url = re.compile(REFERENCE_URL_PATTERN, re.IGNORECASE)
     text = re.sub(r"[^\x00-\x7F]+", " ", text)
     text = re.sub(r"<ref(.*?)>", "<ref>", text)
     text = re.sub(ref_url, "<url>", text)
