@@ -53,10 +53,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# local-mode driver == executor: give the columnar caches headroom at
-# 100k-page scale (the JVM heap is fixed by the first session in the process)
-os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 KG_PAGES = int(os.environ.get("BENCH_KG_PAGES", "100000"))
@@ -402,6 +398,11 @@ class _Emitter:
 
 
 def main():
+    # local-mode driver == executor: give the columnar caches headroom at
+    # 100k-page scale (the JVM heap is fixed by the first session in the
+    # process).  Set here, not at import: the tests import this module, and
+    # an import-time default would size their shared JVM too.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     em = _Emitter(sf)
     committed = latest_committed_kg()

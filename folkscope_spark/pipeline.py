@@ -36,6 +36,7 @@ from .conceptualize import (
 )
 from .match import match_patterns, merge_eventualities
 from .metrics import KernelTimers
+from .schemas import EVENTUALITIES
 from .snapshots import SnapshotStore
 
 # Probase dimensions below this row count are collected whole (the vocabulary
@@ -84,10 +85,14 @@ def run_pipeline(
     # into in-kernel compute (summed across cores, wall + process_time) vs
     # framework (Arrow/shuffle/schedule) overhead
     kernel_timers = KernelTimers(spark)
-    fp = (f"v1:n_pages={n_pages}:n_items={n_items}:minp={min_plausibility}"
+    fp = (f"v2:n_pages={n_pages}:n_items={n_items}:minp={min_plausibility}"
           f":extra={max_extra}:dedupe={dedupe_parse}:dense={dense_tails}"
           f":skip={','.join(sorted(skip_words)) if skip_words else ''}"
           f":sidx={start_index_mode}")
+    # the reference's per-line sentence id (generation_parser.py:137)
+    row_sid = F.concat_ws(
+        "|", F.concat_ws("-", "item_a", "relation", "item_b"), F.col("seq_no")
+    )
 
     def timed(name, fn):
         t0 = time.time()
@@ -222,42 +227,26 @@ def run_pipeline(
         scored = score.threshold(scored, min_plausibility)
 
     # -- parsing -------------------------------------------------------------
-    # thin_content (see parse_assertions): in the one-parse-per-row
-    # configuration the parsed table's content arrays are ~98% duplicates —
-    # emit them once per key per batch and let the match/mine kernels
-    # reconstruct.  Only safe storeless (the cache preserves the producing
-    # partitioning; a committed parquet read may re-split files) and only
-    # when no consumer reads content columns relationally (length_cdf under
-    # adaptive_mining; conceptualize_text).
-    thin = (
-        out_dir is None
-        and not dedupe_parse
-        and not adaptive_mining
-        and not with_concept_text
-    )
+    # one row per distinct (relation, tail), keyed sid = parse.content_key():
+    # parse, mining and matching run once per distinct sentence in both modes
     parsed = timed(
         "parse",
         lambda: store.stage(
             spark, "parsed", fp,
             lambda: parse.parse_assertions(
-                scored, dedupe=dedupe_parse, slim=True, skip_words=skip_words,
-                kernel_acc=kernel_timers["parse"], thin_content=thin,
+                scored, slim=True, skip_words=skip_words,
+                kernel_acc=kernel_timers["parse"],
             ),
         ),
     )
 
     # -- pattern mining ------------------------------------------------------
-    def build_pattern_counts():
-        # pre_dedupe in the duplicated parity configuration: the enumeration
-        # kernel then runs once per distinct sentence in the whole job, not
-        # once per distinct sentence per worker
-        return patterns.count_anchored_patterns(
-            parsed, max_extra=max_extra, pre_dedupe=thin
-        )
-
     pattern_counts = timed(
         "mine_count",
-        lambda: store.stage(spark, "pattern_counts", fp, build_pattern_counts),
+        lambda: store.stage(
+            spark, "pattern_counts", fp,
+            lambda: patterns.count_anchored_patterns(parsed, max_extra=max_extra),
+        ),
     )
     sent_counts = {
         r["relation"]: int(r["n"])
@@ -291,18 +280,24 @@ def run_pipeline(
     # Keeping the per-sentence mapping relational (instead of collect_set of
     # sids per eid) bounds every row — a Zipf-hot eventuality's sentence list
     # never funnels into one aggregation row.
-    # in the duplicated parity configuration, run the distinct-sentence VF2
-    # sweep once as its own job and broadcast the results (see
-    # match_patterns) instead of letting every worker redo it
+    def build_matched():
+        extracted = match_patterns(parsed, mined, kernel_acc=kernel_timers["match"])
+        if dedupe_parse:
+            return extracted
+        # reference parity (one parse per generated line): fan the per-key
+        # extractions out to every scored row of that key, each carrying the
+        # per-line sid "{a}-{rel}-{b}|{seq}" (generation_parser.py:137) and
+        # frequency 1; Spark picks a broadcast or a shuffle join by size
+        rows = scored.select(parse.content_key().alias("_k"), row_sid.alias("sid"))
+        return (
+            extracted.withColumnRenamed("sid", "_k")
+            .join(rows, "_k")
+            .withColumn("frequency", F.lit(1.0))
+            .select(*EVENTUALITIES.fieldNames())
+        )
+
     matched = timed(
-        "match",
-        lambda: store.stage(
-            spark, "matched", fp,
-            lambda: match_patterns(
-                parsed, mined, kernel_acc=kernel_timers["match"],
-                precompute="broadcast" if thin else None,
-            ),
-        ),
+        "match", lambda: store.stage(spark, "matched", fp, build_matched)
     )
     events = timed(
         "merge",
@@ -313,10 +308,10 @@ def run_pipeline(
 
     # -- eventuality-level triples -------------------------------------------
     def build_event_triples():
-        # each matched row carries the parse-stage key in `sid`; re-attach to
-        # the assertion rows (pair subjects + scores) by the matching key:
-        # dedupe mode -> tkey = md5(relation || tail); parity mode ->
-        # sid = "{a}-{rel}-{b}|{seq}" (generation_parser.py:137)
+        # each matched row carries the key of its sentence in `sid`; re-attach
+        # to the assertion rows (pair subjects + scores) by the same key:
+        # dedupe mode -> parse.content_key(); parity mode -> the per-line sid
+        # the matched fan-out attached
         # the matched stream's per-occurrence `frequency` is the parse-stage
         # weight of that sentence, not the merged eventuality frequency —
         # surface it as `weight` so the committed stage schema says what the
@@ -325,14 +320,7 @@ def run_pipeline(
             "eid", "relation", "words",
             F.col("frequency").alias("weight"), F.col("sid").alias("k"),
         ).withColumn("obj_text", F.concat_ws(" ", "words"))
-        if dedupe_parse:
-            key = F.md5(F.concat_ws("\x1f", "relation", "tail"))
-        else:
-            key = F.concat_ws(
-                "|",
-                F.concat_ws("-", "item_a", "relation", "item_b"),
-                F.col("seq_no"),
-            )
+        key = parse.content_key() if dedupe_parse else row_sid
         sc = scored.select(
             key.alias("k"),
             F.concat_ws("-", "item_a", "item_b").alias("subj"),

@@ -89,7 +89,10 @@ MENTION = T.StructType(
 # D6 — parsed sentence record (src/pattern/utils.py:269-298)
 PARSED = T.StructType(
     [
-        T.StructField("sid", T.StringType()),  # "{a}-{rel}-{b}|{row}" (generation_parser.py:137)
+        # content key md5(relation ␟ tail) (parse.content_key); the reference's
+        # per-line "{a}-{rel}-{b}|{row}" (generation_parser.py:137) exists only
+        # on the parity pipeline's matched rows
+        T.StructField("sid", T.StringType()),
         T.StructField("relation", T.StringType()),
         T.StructField("text", T.StringType()),
         T.StructField("tokens", T.ArrayType(T.StringType())),

@@ -1,7 +1,9 @@
 """bench.py stage-timing tripwire (VERDICT r3 next #5): a seeded slowdown
 must be flagged, plain noise must not."""
 
+import importlib
 import json
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -233,3 +235,14 @@ def test_slim_emission_fits_recording_tail():
     # the full-detail document is untouched (it goes to the progress file)
     assert doc["kg"]["stage_timings"] is stages
     assert doc["legs_completed"][-1] == "scaling_n32"
+
+
+def test_import_leaves_driver_heap_alone(monkeypatch):
+    """Importing bench must not size the JVM of whoever imports it: this
+    suite's shared session took its 16g bench default and outgrew a 15 GB
+    host."""
+    import bench
+
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    importlib.reload(bench)
+    assert "SPARK_DRIVER_MEM" not in os.environ
